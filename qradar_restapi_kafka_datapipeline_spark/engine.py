@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -64,11 +66,128 @@ def read_artifact(spark, path: str, base_path: str | None = None):
     return df
 
 
+def _artifact_keys_under(root: str) -> list[tuple[int, str]]:
+    """The schema memo's keys for the artifacts at or under ``root``.  The
+    keys are copied with one ``list`` call, which other threads' builds
+    cannot interleave with."""
+    return [k for k in list(_ARTIFACT_SCHEMAS)
+            if k[1] == root or k[1].startswith(root + "/")]
+
+
+def _move_artifact_schemas(src: str, dst: str | None) -> None:
+    """Re-key the memo entries at or under ``src`` to the same relative
+    paths under ``dst`` after ``src`` was renamed to ``dst``; entries
+    already under ``dst`` belong to a replaced tree and are dropped.  With
+    ``dst`` None the entries under ``src`` are only dropped."""
+    if dst is not None:
+        for key in _artifact_keys_under(dst):
+            _ARTIFACT_SCHEMAS.pop(key, None)
+    for key in _artifact_keys_under(src):
+        schema = _ARTIFACT_SCHEMAS.pop(key, None)
+        if dst is not None and schema is not None:
+            _ARTIFACT_SCHEMAS[(key[0], dst + key[1][len(src):])] = schema
+
+
+def refresh_artifacts(spark, path: str, served: tuple[str, ...] = ()) -> None:
+    """Re-open the memoized artifacts at or under ``path`` after a rewrite.
+    Called by the build, rebuild and compaction paths that rewrite an
+    artifact tree, so a rewrite with a different column set is read back
+    with its new shape instead of the memoized old one.  This session's
+    entries whose files still exist are re-inferred here, in the rewrite,
+    so the next request does not pay the footer job; other sessions'
+    entries and entries of removed trees are dropped.  ``served`` names the
+    trees under ``path`` that the index's serve opens; a build opens them
+    too, so a serve in the building session never infers — also when the
+    build writes to an :func:`ensure_artifact` staging tree, whose entries
+    move to the published path with the rename."""
+    from pyspark.errors import AnalysisException
+
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    root = path.rstrip("/")
+    reopen = [f"{root}/{sub}" for sub in served]
+    for key in _artifact_keys_under(root):
+        sid, p = key
+        _ARTIFACT_SCHEMAS.pop(key, None)
+        if sid == id(spark) and fs.exists(hpath(p)):
+            reopen.append(p)
+    for p in reopen:
+        try:
+            read_artifact(spark, p)
+        except AnalysisException:
+            pass  # no readable files now: the next open infers and raises
+
+
+#: ``parquet.`<path>``` — an artifact named in Spark SQL text
+_PARQUET_REF = re.compile(r"parquet\.`([^`]+)`")
+
+
+def artifact_sql(spark, text: str):
+    """``spark.sql(text)`` with every ``parquet.`<path>``` reference opened
+    through :func:`read_artifact`.  Spark resolves a path named in SQL text
+    on every statement, paying the footer-inference job each time; here the
+    schema comes from the memo while the file listing stays fresh per call,
+    so a statement after an append or compaction sees the new files.  The
+    per-call views are dropped once ``spark.sql`` has analysed the statement
+    (analysis is eager; the returned plan no longer needs the catalog).
+
+    Every path named this way, including one in a caller-supplied relation,
+    is read with its memoized schema: whatever rewrites such a tree with a
+    different column set must call :func:`refresh_artifacts`, or the new
+    files are read with the old columns."""
+    views: dict[str, str] = {}
+
+    def sub(m) -> str:
+        path = m.group(1)
+        if path not in views:
+            views[path] = unique_view(read_artifact(spark, path), "__artifact")
+        return views[path]
+
+    try:
+        return spark.sql(_PARQUET_REF.sub(sub, text))
+    finally:
+        for name in views.values():
+            spark.catalog.dropTempView(name)
+
+
+def local_relation(spark, rows, schema):
+    """A DataFrame over driver-side ``rows`` that plans as a JVM
+    ``LocalRelation``.  ``spark.createDataFrame(<python list>)`` goes through
+    ``sc.parallelize`` and plans as a ``LogicalRDD``, so every use of it runs
+    a job on Python workers; an Arrow table is folded into the plan by the
+    driver.  Arrow keeps doubles exact.  ``schema`` is a StructType or a DDL
+    string; ``rows`` are tuples in its column order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def unique_view(df, key: str) -> str:
     """Register ``df`` as a temp view under a fresh per-invocation name."""
     name = f"{key}_{next(_VIEW_SEQ)}"
     df.createOrReplaceTempView(name)
     return name
+
+
+@contextmanager
+def scoped_view(df, key: str):
+    """:func:`unique_view` for the statements analysed inside the block; the
+    view is dropped on exit.  Plans analysed inside stay valid after it."""
+    name = unique_view(df, key)
+    try:
+        yield name
+    finally:
+        df.sparkSession.catalog.dropTempView(name)
 
 
 def persist_tracked(df, key: str):
@@ -259,6 +378,9 @@ def ensure_artifact(path: str, build) -> str:
     # "lost the race" ONLY if the destination actually exists — EACCES /
     # EXDEV (ARTIFACT_ROOT on another filesystem) must re-raise instead of
     # deleting the fresh build and deferring the failure downstream.
+    # The schemas a build memoized under the staging tree move with the
+    # rename, so the first serve of the published tree infers nothing; a
+    # lost race or a failed build drops them.
     try:
         build(tmp)
         try:
@@ -267,7 +389,10 @@ def ensure_artifact(path: str, build) -> str:
             if not os.path.isdir(path):
                 raise
             shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            _move_artifact_schemas(tmp, path)
     finally:
+        _move_artifact_schemas(tmp, None)
         shutil.rmtree(tmp, ignore_errors=True)
     return path
 
@@ -310,6 +435,17 @@ _DEFAULT_CONF: dict[str, str] = {
         "SPARK_GRAFT_PART_DISCOVERY_THRESHOLD", "128"
     ),
     "spark.ui.enabled": "false",
+    # Generated-class cache (default 100 entries).  The three retrieval serve
+    # kinds (text kNN, hybrid, IVF-PQ) need about 16, 59 and 48 classes, so
+    # at the default they evicted each other and every request recompiled:
+    # 16-17, 59-61 and 46-47 janino compiles per steady request, against 6,
+    # 16-18 and 0 at 1024 (4-core host, sf0.01 corpus).
+    "spark.sql.codegen.cache.maxEntries": "1024",
+    # The cache is keyed on the generated source; with the codegen stage id
+    # in the class name, the same pipeline at another stage position missed
+    # it.  Without the id, a cold hybrid serve compiled 48 classes instead
+    # of 58 and the first one after a compaction 10 instead of 20.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

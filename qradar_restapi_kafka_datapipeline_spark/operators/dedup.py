@@ -454,21 +454,24 @@ def _verify_jaccard(
 _CLUSTER_COLLECT_CAP = 65536
 
 
-def _numeric_or_string(dtype) -> bool:
-    from pyspark.sql.types import NumericType, StringType
+def _integral_or_string(dtype) -> bool:
+    """Id types whose Python ``<`` is Spark's ``MIN`` order.  Floating and
+    decimal ids take the distributed path: NaN compares unordered in
+    Python but greatest in Spark."""
+    from pyspark.sql.types import IntegralType, StringType
 
-    return isinstance(dtype, (NumericType, StringType))
+    return isinstance(dtype, (IntegralType, StringType))
 
 
 def _dup_clusters_driver(spark, rows, id_type) -> DataFrame:
     """Union-find over the collected edge list; returns the identical
     ``(doc_id, cluster_id)`` relation min-label propagation converges to.
     Path-compressed find + union-by-attachment to the smaller label keeps
-    it O(E·α); cluster_id is the MIN member per component — for numeric ids
-    Python ``min`` is SQL ``MIN``, and for ASCII string ids Python's
-    code-point order equals Spark's binary UTF-8 order (non-ASCII ids take
-    the distributed path via :func:`_numeric_or_string` gating by the
-    caller)."""
+    it O(E·α); cluster_id is the MIN member per component — for integral ids
+    Python ``min`` is SQL ``MIN``, and for string ids (ASCII or not)
+    Python's code-point order equals Spark's binary UTF-8 order, because
+    UTF-8 preserves code-point order.  The caller gates the id type with
+    :func:`_integral_or_string`."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -517,13 +520,13 @@ def dup_clusters(
     two independent decisions; the component view removes ``size-1`` docs per
     cluster exactly once.
 
-    Bounded graphs (≤ :data:`_CLUSTER_COLLECT_CAP` edges — the verified
-    near-dup pair set is tiny relative to the corpus) take the round-14
-    driver fast path (guide §5): ONE collect of the edge list, union-find in
-    plain Python, literal ``(doc_id, cluster_id)`` relation back — replacing
-    one aggregate action per propagation round with a single action, the
-    same bounded-constant posture as the MMR greedy and the IVF serve
-    collects.  The cap probe is ``limit(cap+1).collect()``: at most one
+    Bounded graphs of integral or string ids (≤ :data:`_CLUSTER_COLLECT_CAP`
+    edges — the verified near-dup pair set is tiny relative to the corpus)
+    take the round-14 driver fast path (guide §5): ONE collect of the edge
+    list, union-find in plain Python, literal ``(doc_id, cluster_id)``
+    relation back — replacing one aggregate action per propagation round
+    with a single action, the same bounded-constant posture as the MMR
+    greedy and the IVF serve collects.  The cap probe is ``limit(cap+1).collect()``: at most one
     extra row is pulled, and an over-cap graph falls through to the
     distributed loop untouched.
 
@@ -548,7 +551,7 @@ def dup_clusters(
 
     e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     id_type = e.schema["u"].dataType
-    if _numeric_or_string(id_type):
+    if _integral_or_string(id_type):
         probe = e.limit(_CLUSTER_COLLECT_CAP + 1).collect()
         if len(probe) <= _CLUSTER_COLLECT_CAP and not any(
             r["u"] is None or r["v"] is None for r in probe

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from qradar_restapi_kafka_datapipeline_spark.engine import refresh_artifacts
 from qradar_restapi_kafka_datapipeline_spark.operators.dedup import cosine_expr
 
 
@@ -690,6 +691,7 @@ def build_ivf_index(
     _assign(emb, cents, 1, id_col, vec_col).write.mode("overwrite").partitionBy(
         "list_id"
     ).parquet(f"{path}/assignments")
+    refresh_artifacts(spark, path, served=("centroids", "assignments"))
     return cents
 
 
@@ -772,7 +774,10 @@ def knn_ivf_from_index(
     ``test_ivf_index_scan_prunes_to_probed_lists``.  Exact cosine re-rank
     over the candidates, identical to :func:`knn_ivf`.
     """
-    from qradar_restapi_kafka_datapipeline_spark.engine import read_artifact
+    from qradar_restapi_kafka_datapipeline_spark.engine import (
+        local_relation,
+        read_artifact,
+    )
 
     # r13 (guide §5): sort the bounded centroid rows driver-side — the
     # DataFrame orderBy ran a range-partition sampling pass plus a sort
@@ -798,7 +803,8 @@ def knn_ivf_from_index(
     q_rows = q.limit(_SERVE_COLLECT_CAP + 1).collect()
     if len(q_rows) <= _SERVE_COLLECT_CAP:
         probed = sorted({r["list_id"] for r in q_rows})
-        q = spark.createDataFrame(
+        q = local_relation(
+            spark,
             [(r["q_id"], r["qv"], r["list_id"]) for r in q_rows],
             _serve_q_schema(queries.schema, id_col, vec_col),
         )
@@ -1130,6 +1136,7 @@ def compact_ivf_index(spark, path: str,
         fs.rename(hpath(old), hpath(path))
         raise RuntimeError(f"compact_ivf_index: rename failed for {tmp}")
     fs.delete(hpath(old), True)
+    refresh_artifacts(spark, path)
     return n
 
 
@@ -1192,6 +1199,7 @@ def compact_ivfpq_index(spark, path: str) -> int:
         fs.rename(hpath(old), hpath(path))
         raise RuntimeError(f"compact_ivfpq_index: rename failed for {tmp}")
     fs.delete(hpath(old), True)
+    refresh_artifacts(spark, path)
     return n
 
 
@@ -1310,6 +1318,7 @@ def rebalance_ivf_index(
         fs.rename(hpath(old), hpath(path))  # restore the live index
         raise RuntimeError(f"rebalance_ivf_index: rename failed for {tmp}")
     fs.delete(hpath(old), True)
+    refresh_artifacts(spark, path)
     return n
 
 
@@ -1790,6 +1799,7 @@ def build_ivfpq_index(
     codes.join(assign, "vec_id").write.mode("overwrite").partitionBy(
         "list_id"
     ).parquet(f"{path}/codes")
+    refresh_artifacts(spark, path, served=("centroids", "codebooks", "codes"))
 
 
 def _merged_codes(spark, path: str, probed: list[int]) -> DataFrame:
@@ -1845,16 +1855,28 @@ def knn_ivfpq_from_index(
     4,096 pairs — an online serve batch) it is materialized and the
     raw-vector scan carries a literal ``vec_id IN (...)`` pushdown:
     genuinely bounded reads, no corpus pass (ADVICE r10).  The cap is
-    sized to the SQL-literal budget, not driver memory — a 100k-tuple
-    VALUES clause plus a 100k-id IN list is megabytes of SQL whose
-    parse/analysis and codegen fallback would dwarf the saved corpus
-    scan (ADVICE r11; same janino cliff as the IVF assignment
-    literal-fold budget).  Larger offline batches fall back to the
+    sized to the SQL-literal budget, not driver memory — a 100k-id IN
+    list is megabytes of SQL whose parse/analysis and codegen fallback
+    would dwarf the saved corpus scan (ADVICE r11; same janino cliff as
+    the IVF assignment literal-fold budget).  Larger offline batches fall back to the
     single streaming pass with the shortlist broadcast; the DuckDB
     oracle always replays the streaming formulation, so the gate
-    hash-proves the two equal."""
-    probes = spark.sql(
-        ivf_assign_sql("spark", f"{path}/centroids", dim, nprobe, source_view)
+    hash-proves the two equal.
+
+    Every per-request constant is a JVM-local relation, the centroids and
+    codebooks open through the artifact schema memo
+    (:func:`...engine.artifact_sql`), and the request's temp views are
+    dropped once its statements are analysed."""
+    from qradar_restapi_kafka_datapipeline_spark.engine import (
+        artifact_sql,
+        local_relation,
+        read_artifact,
+        scoped_view,
+    )
+
+    probes = artifact_sql(
+        spark,
+        ivf_assign_sql("spark", f"{path}/centroids", dim, nprobe, source_view),
     ).where(F.col("vec_id") < query_max).select(
         F.col("vec_id").alias("q_id"), "list_id"
     )
@@ -1866,7 +1888,8 @@ def knn_ivfpq_from_index(
     # one less execution of the assignment subplan per serve.
     probe_rows = probes.collect()
     probed = sorted({r["list_id"] for r in probe_rows})
-    probes = spark.createDataFrame(
+    probes = local_relation(
+        spark,
         [(int(r["q_id"]), int(r["list_id"])) for r in probe_rows],
         "q_id BIGINT, list_id INT",
     )
@@ -1879,72 +1902,62 @@ def knn_ivfpq_from_index(
         # (delete_from_ivf_index): broadcast anti-join on the code scan,
         # so deleted vectors can neither rank nor enter a refine
         # shortlist; a rebuild compacts the log away.
-        from qradar_restapi_kafka_datapipeline_spark.engine import (
-            read_artifact,
-        )
-
         codes = codes.join(
             F.broadcast(
                 read_artifact(spark, tomb).select("vec_id").distinct()
             ),
             "vec_id", "left_anti",
         )
-    # ADVICE r13: per-invocation view names (engine.unique_view) — fixed
-    # global names were safe only while this was the sole view-registering
-    # serve in the takedown pool; unique names make it reentrant under any
-    # caller threading (two concurrent ivfpq serves can no longer clobber
-    # each other between registration and spark.sql analysis).
-    from qradar_restapi_kafka_datapipeline_spark.engine import unique_view
-
-    codes_view = unique_view(codes, "__ivfpq_codes")
-    probes_view = unique_view(F.broadcast(probes), "__ivfpq_probes")
     lut = pq_lut_sql("spark", f"{path}/codebooks", m, dim // m, query_max,
                      source_view)
-    if refine_k is not None:
+    # ADVICE r13: per-invocation view names — two concurrent ivfpq serves
+    # can never clobber each other between registration and analysis.
+    with (
+        scoped_view(codes, "__ivfpq_codes") as codes_view,
+        scoped_view(F.broadcast(probes), "__ivfpq_probes") as probes_view,
+    ):
         codes_rel = f"SELECT vec_id, mi, j, list_id FROM {codes_view}"
         probes_rel = f"SELECT q_id, list_id FROM {probes_view}"
-        shortlist_rel = None
-        n_id_in = None
-        if query_max * refine_k <= 4_096:
-            # bounded serve: land the ADC shortlist (≤ queries×refine_k
-            # rows) driver-side, re-read the raw vectors through an
-            # IN-list pushed to the parquet scan.
-            pairs = spark.sql(
-                "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut,
-                                          refine_k)
-            ).select("q_id", "n_id").collect()
-            vals = ", ".join(
-                f"({int(r['q_id'])}, {int(r['n_id'])})" for r in pairs
+        if refine_k is None:
+            return artifact_sql(
+                spark, "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut, k)
             )
-            shortlist_rel = (
-                f"SELECT * FROM (VALUES {vals}) AS sl(q_id, n_id)"
-                if pairs else
-                "SELECT CAST(NULL AS BIGINT) AS q_id, "
-                "CAST(NULL AS BIGINT) AS n_id WHERE 1 = 0"
+
+        def refine(**bounded):
+            return artifact_sql(
+                spark,
+                _ivfpq_refine_sql(
+                    "spark",
+                    codes_rel,
+                    probes_rel,
+                    lut,
+                    _vec_rel_sql("spark", source_view),
+                    refine_k,
+                    k,
+                    dim,
+                    **bounded,
+                ),
             )
-            n_id_in = [int(r["n_id"]) for r in pairs]
-        return spark.sql(
-            _ivfpq_refine_sql(
-                "spark",
-                codes_rel,
-                probes_rel,
-                lut,
-                _vec_rel_sql("spark", source_view),
-                refine_k,
-                k,
-                dim,
-                shortlist_rel=shortlist_rel,
-                n_id_in=n_id_in,
-            )
+
+        if query_max * refine_k > 4_096:
+            return refine()  # offline batch: one streaming pass
+        # bounded serve: land the ADC shortlist (≤ queries×refine_k rows)
+        # driver-side, re-read the raw vectors through an IN-list pushed
+        # to the parquet scan.
+        pairs = artifact_sql(
+            spark,
+            "WITH " + _ivfpq_rank_sql(codes_rel, probes_rel, lut, refine_k),
+        ).select("q_id", "n_id").collect()
+        shortlist = local_relation(
+            spark,
+            [(int(r["q_id"]), int(r["n_id"])) for r in pairs],
+            "q_id BIGINT, n_id BIGINT",
         )
-    return spark.sql(
-        "WITH " + _ivfpq_rank_sql(
-            f"SELECT vec_id, mi, j, list_id FROM {codes_view}",
-            f"SELECT q_id, list_id FROM {probes_view}",
-            lut,
-            k,
-        )
-    )
+        with scoped_view(shortlist, "__ivfpq_shortlist") as shortlist_view:
+            return refine(
+                shortlist_rel=f"SELECT q_id, n_id FROM {shortlist_view}",
+                n_id_in=[int(r["n_id"]) for r in pairs],
+            )
 
 
 def ivfpq_recall_report(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from qradar_restapi_kafka_datapipeline_spark.engine import refresh_artifacts
+
 # ---------------------------------------------------------------------------
 # language ID — marker-phrase counting (deterministic heuristic)
 # ---------------------------------------------------------------------------
@@ -1244,6 +1246,7 @@ def build_text_index(
         WHERE df * 2 > (SELECT n FROM ndocs)
         """
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stoplist")
+    refresh_artifacts(spark, path, served=("stoplist", "postings", "norms"))
 
 
 def _query_postings(text: str, stoplist: set, dim: int) -> dict[int, int]:
@@ -1289,20 +1292,21 @@ def text_knn_from_index(
     filter, one terminal sqrt/divide, (cos DESC, n_id) ties — so a query
     using an indexed document's own text reproduces that entry's rows
     exactly (the gate proves it)."""
-    from qradar_restapi_kafka_datapipeline_spark.engine import read_artifact
+    from qradar_restapi_kafka_datapipeline_spark.engine import (
+        local_relation,
+        read_artifact,
+    )
 
     stoplist = {
         r["feat"] for r in read_artifact(spark, f"{path}/stoplist").collect()
     }
     qp = _query_postings(query_text, stoplist, dim)
     if not qp:
-        return spark.createDataFrame(
-            [], "q_id LONG, n_id LONG, cos DOUBLE, rk INT"
+        return local_relation(
+            spark, [], "q_id LONG, n_id LONG, cos DOUBLE, rk INT"
         )
     groups = sorted({b % n_groups for b in qp})
-    qdf = spark.createDataFrame(
-        [(b, w) for b, w in qp.items()], "bucket BIGINT, qw BIGINT"
-    )
+    qdf = local_relation(spark, list(qp.items()), "bucket BIGINT, qw BIGINT")
     n2q = sum(w * w for w in qp.values())
     cand = (
         read_artifact(
@@ -1550,6 +1554,7 @@ def compact_text_index(
         # log itself can drop (a crash before this line is harmless — the
         # anti-joins are no-ops on the already-dropped rows)
         fs.delete(hpath(f"{path}/tombstones"), True)
+    refresh_artifacts(spark, path)
     return n
 
 
@@ -1728,13 +1733,23 @@ def hybrid_rrf(
     lexical side from a maintained ``(doc_id, word, tf)`` relation —
     with BOTH set (the :func:`build_hybrid_text_index` artifact) a
     serve never re-tokenizes the corpus: two index reads plus the
-    bounded fusion, the production search-stack shape."""
-    lex = spark.sql(
+    bounded fusion, the production search-stack shape.  Artifacts named
+    in either relation (:func:`hybrid_index_rels`) are opened through
+    :func:`...engine.artifact_sql`: memoized schema, fresh file listing.
+    A tree named in ``tf_rel`` / ``posts_rel`` must therefore be rewritten
+    only by code that calls :func:`...engine.refresh_artifacts` (every
+    build, append and compaction here does), or a changed column set is
+    read with the old schema."""
+    from qradar_restapi_kafka_datapipeline_spark.engine import artifact_sql
+
+    lex = artifact_sql(
+        spark,
         bm25_topk_sql("spark", query_doc=query_doc, k=pool,
-                      source=source, tf_rel=tf_rel)
+                      source=source, tf_rel=tf_rel),
     )
     if posts_rel is not None:
-        den_df = spark.sql(
+        den_df = artifact_sql(
+            spark,
             hashed_text_knn_sql("spark", query_max=query_doc + 1, k=pool,
                                 dim=dim, source=source, posts_rel=posts_rel)
         )
@@ -1829,6 +1844,7 @@ def build_hybrid_text_index(
             tf_rel=f"(SELECT doc_id, feat, c FROM parquet.`{path}/btf`)",
         )
     ).write.mode("overwrite").parquet(f"{path}/posts")
+    refresh_artifacts(spark, path, served=("tf", "posts"))
 
 
 def append_to_hybrid_index(
@@ -1911,6 +1927,7 @@ def append_to_hybrid_index(
         fs.rename(hpath(old), hpath(live))
         raise RuntimeError(f"append_to_hybrid_index: rename failed for {tmp}")
     fs.delete(hpath(old), True)
+    refresh_artifacts(spark, f"{path}/posts")
 
 
 def delete_from_hybrid_index(spark, path: str, ids) -> None:
@@ -1934,7 +1951,12 @@ def hybrid_index_rels(spark, path: str) -> tuple[str, str]:
       FROZEN-analyzer posture (``append_to_text_index``'s documented
       contract) until :func:`compact_hybrid_index` re-derives the
       postings from the remaining bigram-tf, after which the whole
-      artifact is rebuild-exact again (pytest-pinned)."""
+      artifact is rebuild-exact again (pytest-pinned).
+
+    The relations name the artifact's trees as ``parquet.`<path>```;
+    :func:`hybrid_rrf` opens them per serve through the schema memo, so a
+    request pays no footer-inference job and still sees every append and
+    compaction."""
     tomb = _text_index_tombstones(spark, path)
     tf = f"parquet.`{path}/tf`"
     posts = f"parquet.`{path}/posts`"
@@ -1992,6 +2014,7 @@ def compact_hybrid_index(spark, path: str, dim: int = 4096) -> None:
         tf_rel=f"(SELECT doc_id, feat, c FROM parquet.`{path}/btf`)",
     )))
     fs.delete(hpath(f"{path}/tombstones"), True)
+    refresh_artifacts(spark, path)
 
 
 def bm25_index_streaming(
@@ -2394,8 +2417,8 @@ def chunk_knn(
     memoized views supplied (``doc_postings_view`` for the query side), a
     repeated query pays only a pruned postings scan + the bounded rank."""
     from qradar_restapi_kafka_datapipeline_spark.engine import (
-        materialize_view,
-        unique_view,
+        local_relation,
+        scoped_view,
     )
 
     cp_view = chunk_postings_view or build_chunk_postings(
@@ -2412,17 +2435,18 @@ def chunk_knn(
         )
     )
     q_rows = spark.sql(q_src).collect()
-    qlit = spark.createDataFrame(
+    qlit = local_relation(
+        spark,
         [(query_doc, r["bucket"], r["w"]) for r in q_rows],
         "doc_id BIGINT, bucket BIGINT, w BIGINT",
     )
-    qname = unique_view(qlit, "__chunk_qvec")
     sql = chunk_knn_sql(
         "spark", query_doc, k, size, stride, dim, source,
         chunk_postings_rel=f"SELECT doc_id, bucket, w FROM {cp_view}",
     )
     # swap the inline query-postings derivation for the pinned vector
-    return spark.sql(_swap_qp(sql, qname))
+    with scoped_view(qlit, "__chunk_qvec") as qname:
+        return spark.sql(_swap_qp(sql, qname))
 
 
 def _swap_qp(sql: str, qname: str) -> str:

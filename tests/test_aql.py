@@ -1,9 +1,12 @@
-"""AQL frontend end-to-end: all 13 reference queries vs the DuckDB oracle.
+"""AQL frontend end-to-end: every query of the package's AQL corpus vs the
+DuckDB oracle.
 
-This is the t2 pattern (SURVEY §5 item 2) at sf0.001: translate the reference's
-own AQL strings (qradar/input/queries.json, new_queries.json) to Spark SQL, run
-them, and hash-compare against the identical AQL translated to DuckDB over the
-same parquet.
+This is the t2 pattern (SURVEY §5 item 2) at sf0.001: translate the engine's
+own AQL strings (``aql_corpus.AQL_CORPUS``, which mirrors the reference's
+qradar/input/queries.json and new_queries.json) to Spark SQL, run them, and
+hash-compare against the identical AQL translated to DuckDB over the same
+parquet.  When the reference inputs are present, a drift check compares them
+with the package's corpus.
 """
 
 import json
@@ -12,6 +15,7 @@ import os
 import duckdb
 import pytest
 
+from qradar_restapi_kafka_datapipeline_spark.aql_corpus import AQL_CORPUS
 from qradar_restapi_kafka_datapipeline_spark.plans.aql import (
     AQLFrontend,
     aql_oracle_sql,
@@ -32,17 +36,6 @@ PARAMS = dict(
     stop_time="2024-02-01 00:00:00",
     event_processor="ep1",
 )
-
-
-def _load_corpus():
-    corpus = {}
-    for path in (REF_QUERIES, REF_NEW_QUERIES):
-        if os.path.exists(path):
-            corpus.update(json.load(open(path)))
-    return corpus
-
-
-CORPUS = _load_corpus()
 
 
 @pytest.fixture(scope="module")
@@ -67,14 +60,38 @@ def _rows_key(df):
     return sorted("|".join(map(str, r)) for r in df[cols].itertuples(index=False, name=None))
 
 
-@pytest.mark.skipif(not CORPUS, reason="reference corpus not available")
-@pytest.mark.parametrize("name", sorted(CORPUS))
+@pytest.mark.parametrize("name", sorted(AQL_CORPUS))
 def test_aql_query_matches_oracle(name, frontend, duck):
-    aql = CORPUS[name]
+    aql = AQL_CORPUS[name]
     spd = frontend.sql(aql, PARAMS).toPandas()
     dpd = duck.execute(aql_oracle_sql(aql, PARAMS)).df()
     assert sorted(spd.columns) == sorted(dpd.columns)
     assert _rows_key(spd) == _rows_key(dpd)
+
+
+def _normalized(aql: str) -> str:
+    return " ".join(aql.split())
+
+
+@pytest.mark.skipif(
+    not any(os.path.exists(p) for p in (REF_QUERIES, REF_NEW_QUERIES)),
+    reason="optional drift check: reference query inputs not present",
+)
+def test_reference_queries_have_not_drifted():
+    """Every query in the reference's input files is in the package's
+    corpus under the same name, with the same text up to whitespace, so
+    the oracle test above covers each of them."""
+    for path in (REF_QUERIES, REF_NEW_QUERIES):
+        if not os.path.exists(path):
+            continue
+        queries = json.load(open(path))
+        assert queries, f"{path} holds no queries"
+        missing = sorted(set(queries) - set(AQL_CORPUS))
+        assert not missing, f"{path}: not in AQL_CORPUS: {missing}"
+        for name, aql in queries.items():
+            assert _normalized(aql) == _normalized(AQL_CORPUS[name]), (
+                f"{name} in {path} drifted"
+            )
 
 
 def test_translate_shapes():
@@ -368,12 +385,11 @@ def test_non_iso_start_stop_skips_partition_bounds_not_translation():
     assert "event_date <= DATE'2024-01-02'" in out2
 
 
-@pytest.mark.skipif(not CORPUS, reason="reference corpus not available")
 def test_bound_parameters_match_format_splice_on_whole_corpus(frontend):
     """VERDICT r3 #6: named-parameter binding (spark.sql args=...) must be
     value-identical to the reference-parity str.format splice on EVERY
     corpus query."""
-    for name, aql in CORPUS.items():
+    for name, aql in AQL_CORPUS.items():
         fmt = _rows_key(frontend.sql(aql, PARAMS).toPandas())
         bound = _rows_key(frontend.sql_bound(aql, PARAMS).toPandas())
         assert fmt == bound, f"binding modes diverge on {name}"

@@ -354,6 +354,46 @@ def test_dup_clusters_random_graph_vs_union_find(spark):
     assert got == expected
 
 
+def _no_driver_path(*_):
+    raise AssertionError("took the driver union-find path")
+
+
+def test_dup_clusters_distributed_path_equals_driver_path(spark, monkeypatch):
+    """Graphs over ``_CLUSTER_COLLECT_CAP`` edges take the distributed
+    min-label loop; it must give the driver union-find's clusters, for
+    integral ids and for string ids with non-ASCII characters (UTF-8 byte
+    order is code-point order)."""
+    import random
+
+    from qradar_restapi_kafka_datapipeline_spark.operators import dedup as D
+
+    rng = random.Random(11)
+    edges = sorted({(rng.randrange(60), rng.randrange(60)) for _ in range(120)})
+    edges = [(a, b) for a, b in edges if a != b]
+    heads = ["a", "z", "\u00e9", "\u65e5", "\U0001f600"]
+    named = [(f"{heads[a % 5]}{a}", f"{heads[b % 5]}{b}") for a, b in edges]
+    for rows, ddl in ((edges, "id_a BIGINT, id_b BIGINT"),
+                      (named, "id_a STRING, id_b STRING")):
+        pairs = spark.createDataFrame(rows, ddl)
+        driver = sorted(map(tuple, D.dup_clusters(pairs).collect()))
+        with monkeypatch.context() as m:
+            m.setattr(D, "_CLUSTER_COLLECT_CAP", 5)
+            m.setattr(D, "_dup_clusters_driver", _no_driver_path)
+            distributed = sorted(map(tuple, D.dup_clusters(pairs).collect()))
+        assert distributed == driver
+
+
+def test_dup_clusters_float_ids_take_distributed_path(spark, monkeypatch):
+    """Floating ids never take the driver path: Python orders NaN unlike
+    Spark's ``MIN``."""
+    from qradar_restapi_kafka_datapipeline_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_dup_clusters_driver", _no_driver_path)
+    pairs = spark.createDataFrame([(2.0, 1.5), (2.0, 3.0)], "id_a DOUBLE, id_b DOUBLE")
+    got = sorted(map(tuple, D.dup_clusters(pairs).collect()))
+    assert got == [(1.5, 1.5), (2.0, 1.5), (3.0, 1.5)]
+
+
 # ---------------------------------------------------------------------------
 # incremental (cross-snapshot) dedup
 # ---------------------------------------------------------------------------
